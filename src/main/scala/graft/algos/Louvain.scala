@@ -24,10 +24,12 @@ import graft.engine.Lineage
   *
   * Scale shape per round: one edge⋈label join co-partitioned on the vertex
   * key + a (vertex, community) hash-agg for k_in; one tiny per-community
-  * sum for Σtot; one broadcast-size 1-row 2m factor; argmax as TWO
-  * hash-aggs (max g, then min community at the max — the two-phase MSF
-  * discipline, never a struct min_by SortAggregate). State is one LONG
-  * label per vertex.
+  * sum for Σtot; one broadcast-size 1-row 2m factor; argmax as ONE
+  * `max_by(comm, (g, −comm))` aggregate per vertex (ties on g → smallest
+  * community). Its struct ordering key plans as a SortAggregate, unlike
+  * the LONG-keyed hash-aggs of the MSF discipline, but it replaces the
+  * old max-g agg + join + min-community agg per round and measured
+  * 1.4–1.9× faster. State is one LONG label per vertex.
   */
 object Louvain {
 

@@ -6,20 +6,24 @@ import org.apache.spark.sql.functions._
 import graft.engine.Lineage
 import graft.graph.GraphOps
 
-/** Triangle counting (SURVEY.md §2.4 A4, §3.3): orient each undirected edge
-  * low→high by (degree, id), build wedges with one self-join, close with a
-  * left-semi join — each triangle counted exactly once. Not the iterate
-  * kernel: LA3's TC is likewise a two-phase neighborhood-exchange +
-  * intersection app.
+/** Triangle counting (SURVEY.md §2.4 A4, §3.3) as LA3 does it: a
+  * neighbourhood exchange followed by a row intersection (masked SpGEMM).
+  * Each undirected edge is oriented low→high by (degree, id); every vertex
+  * v packs its forward adjacency N⁺(v) into one array row; each oriented
+  * edge (a, b) meets N⁺(a) and N⁺(b), and S_ab = N⁺(a) ∩ N⁺(b) is exactly
+  * the set of third corners c of the triangles a→b→c. The orientation is
+  * acyclic, so each triangle is found once, at its first edge.
   *
-  * Scale notes: wedge generation is the quadratic-in-degree step. Orienting
-  * by (degree, id) instead of raw id is the standard wedge reducer — every
-  * vertex's forward-degree is then ≤ √(2m)-ish, so hub vertices (whose
-  * id-ordered forward-degree can be Θ(deg)) no longer dominate the wedge
-  * fan-out. The count is orientation-invariant, so the oracle is unchanged.
-  * The oriented edge set is materialized once and reused by all three plan
-  * legs (two wedge sides + closing), instead of re-running the upstream
-  * derivation per leg. The closing join is left-semi (no payload moves).
+  * Scale notes: orienting by (degree, id) instead of raw id caps every
+  * forward degree at ~√(2m), so hub vertices no longer dominate the
+  * intersections, and the count is orientation-invariant, so the oracle is
+  * unchanged. What shuffles is one (b, N⁺(a)) row per oriented edge and
+  * one N⁺(v) row per vertex, not one row per wedge: the wedge self-join
+  * and its closing semi-join (the Σ fwd-deg² fan-out) are gone from
+  * [[count]], [[perVertex]], [[localClustering]] and [[fourCliques]].
+  * [[sampledCount]], [[triangleStrength]] and [[signedBalance]] keep the
+  * wedge plan: the first samples wedges by definition, the other two
+  * carry per-edge payloads through the closing join.
   */
 object TriangleCount {
 
@@ -51,31 +55,65 @@ object TriangleCount {
       .transform(Lineage.cut(_, eager = true))
   }
 
+  /** Forward adjacency N⁺(v) of a degree-oriented edge set: one
+    * (v, nbrs) row per vertex with at least one forward edge.
+    */
+  private def forwardAdjacency(e: DataFrame): DataFrame =
+    e.groupBy(col("src").as("v"))
+      .agg(collect_list(col("dst")).as("nbrs"))
+
+  /** `df` hash-partitioned on `key` into exactly
+    * `spark.sql.shuffle.partitions` parts. The rows the intersection joins
+    * shuffle are small and compress well, but each one costs an array
+    * intersection, so AQE would coalesce them into too few tasks; a
+    * REPARTITION_BY_NUM exchange is never coalesced.
+    */
+  private def spread(df: DataFrame, key: String): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col(key))
+
+  /** Per oriented edge (a, b): `s` = N⁺(a) ∩ N⁺(b), the third corners of
+    * the triangles whose first edge is (a, b). The edges come from
+    * exploding N⁺(a) itself, so each carries N⁺(a) with no join; edges
+    * whose head has no forward edge close no triangle and drop out of the
+    * join with N⁺(b).
+    */
+  private def edgeTriangles(adj: DataFrame): DataFrame =
+    spread(adj.select(col("v").as("a"), explode(col("nbrs")).as("b"),
+        col("nbrs").as("na")), "b")
+      .join(spread(adj, "v").toDF("b", "nb").hint("shuffle_hash"), "b")
+      .select(col("a"), col("b"),
+        array_intersect(col("na"), col("nb")).as("s"))
+
   /** Global triangle count; single row (triangles: long). */
   def count(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
     val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
+    edgeTriangles(forwardAdjacency(e))
+      .agg(coalesce(sum(size(col("s")).cast("long")), lit(0L))
+        .as("triangles"))
   }
 
-  /** Per-vertex triangle participation counts (id, tri_cnt) — each closed
-    * wedge credits all three corners.
+  /** (id, tri_cnt) for every vertex in ≥ 1 triangle: each edge (a, b)
+    * credits a and b with |S_ab| and every c ∈ S_ab with 1, in ONE explode
+    * over the per-edge frame (a union of two branches would compute that
+    * frame twice). Edges with an empty S_ab credit a and b with 0 rather
+    * than being filtered out, which would evaluate the intersection twice.
     */
-  def perVertex(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy("id")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
-  }
+  private def trianglesPerVertex(e: DataFrame): DataFrame =
+    edgeTriangles(forwardAdjacency(e))
+      .select(size(col("s")).as("k"),
+        posexplode(concat(array(col("a"), col("b")), col("s"))))
+      .groupBy(col("col").as("id"))
+      .agg(sum(when(col("pos") < 2, col("k")).otherwise(1)).cast("long")
+        .as("tri_cnt"))
+      .where(col("tri_cnt") > 0)
+
+  /** Per-vertex triangle participation counts (id, tri_cnt) — each
+    * triangle credits all three corners.
+    */
+  def perVertex(edges: DataFrame, canonicalInput: Boolean = false): DataFrame =
+    trianglesPerVertex(orientedByDegree(edges, canonicalInput))
 
   /** Per-vertex local clustering coefficient, scored in exact integer
     * micro-units so the oracle twin is byte-identical across engines:
@@ -95,15 +133,7 @@ object TriangleCount {
       .union(e.select(col("dst").as("id")))
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    val tri = tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy("id")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
-    deg.join(tri, Seq("id"), "left")
+    deg.join(trianglesPerVertex(e), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"),
         col("deg"),
@@ -171,34 +201,25 @@ object TriangleCount {
 
   /** Global 4-clique (K4) count. Under the acyclic (degree, id)
     * orientation every K4 induces a transitive tournament with a unique
-    * vertex order a→b→c→d, so counting (oriented triangle (a,b,c)) ×
-    * (forward edge c→d) pairs whose (a,d) and (b,d) edges also exist
-    * counts each K4 exactly once. Orientation-invariant, so the DuckDB
-    * twin may orient by raw id.
+    * vertex order a→b→c→d, so it is counted once, at its first edge (a, b):
+    * c and d both lie in S_ab = N⁺(a) ∩ N⁺(b) and d ∈ N⁺(c). The count is
+    * Σ over edges with |S_ab| ≥ 2 of Σ_{c ∈ S_ab} |N⁺(c) ∩ S_ab|.
+    * Orientation-invariant, so the DuckDB twin may orient by raw id.
     *
-    * Scale: the candidate fan-out is Σ_tri fwd-deg(c) — the same
-    * arboricity-bounded budget as the wedge step (degree orientation caps
-    * forward-degree at ~√(2m)), and both clique checks are left-semi
-    * joins, so no payload beyond the 4 ids ever shuffles. One row
+    * Scale: beyond the triangle plan, one row per triangle (c, S_ab) meets
+    * N⁺(c) — the Σ_tri |S_ab| budget, bounded by the ~√(2m) forward
+    * degree, and no (a, b, c, d) candidate row ever exists. One row
     * (cliques4: long).
     */
   def fourCliques(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
     val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    val ext = e.select(col("src").as("c"), col("dst").as("d"))
-    val cand = tris.join(ext.hint("shuffle_hash"), "c")
-    cand
-      .join(e.select(col("src").as("a"), col("dst").as("d"))
-          .hint("shuffle_hash"),
-        Seq("a", "d"), "left_semi")
-      .join(e.select(col("src").as("b"), col("dst").as("d"))
-          .hint("shuffle_hash"),
-        Seq("b", "d"), "left_semi")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cliques4"))
+    val adj = forwardAdjacency(e)
+    spread(edgeTriangles(adj)
+        .where(size(col("s")) >= 2)
+        .select(explode(col("s")).as("c"), col("s")), "c")
+      .join(spread(adj, "v").toDF("c", "nc").hint("shuffle_hash"), "c")
+      .agg(coalesce(sum(size(array_intersect(col("nc"), col("s")))
+        .cast("long")), lit(0L)).as("cliques4"))
   }
 
   /** Unipartite 4-cycle (rectangle) count — [[butterflies]]' analog on a
@@ -298,8 +319,9 @@ object TriangleCount {
     * weight — the weighted-clustering mass a pure triangle count misses
     * (a triangle of weight-9 co-purchases is stronger evidence than one
     * of weight-2s). Integral weights ⇒ exact BIGINT output
-    * (n_triangles, strength_sum). Same enumeration plan as [[count]] with
-    * the weight carried through the joins (the signedBalance discipline).
+    * (n_triangles, strength_sum). Wedge enumeration (degree-oriented
+    * wedges + closing join) with the weight carried through the joins (the
+    * signedBalance discipline).
     */
   def triangleStrength(edgesW: DataFrame): DataFrame = {
     val deg = GraphOps.symmetrize(edgesW.select("src", "dst"))
@@ -336,9 +358,9 @@ object TriangleCount {
     * negative edges (sign product +1). Output is one exact row:
     * (balanced, unbalanced).
     *
-    * Scale shape: the [[count]] enumeration plan (degree-oriented wedges +
-    * closing join) with three codegen'd sign expressions over the corner
-    * ids — no extra shuffle beyond the triangle enumeration itself.
+    * Scale shape: wedge enumeration (degree-oriented wedges + closing
+    * join) with three codegen'd sign expressions over the corner ids — no
+    * extra shuffle beyond the triangle enumeration itself.
     */
   def signedBalance(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
     // sign each edge ONCE (|E| hashes) and carry the bit through the

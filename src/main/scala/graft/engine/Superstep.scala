@@ -25,13 +25,20 @@ import org.apache.spark.sql.functions._
   *                     (grid iff the vertex count ≥ broadcastFrontierBelow)
   * @param batchSize    supersteps composed lazily per materializing action —
   *                     amortizes the per-superstep serial term (planning +
-  *                     dispatch, measured ~1 s/superstep at local[32]).
-  *                     Applies on the shuffle layouts (grid/salt) only; the
-  *                     broadcast layout always materializes per superstep.
-  *                     Convergence is checked at batch boundaries, so a run
-  *                     may execute up to batchSize-1 extra (no-op) supersteps
-  *                     past convergence; results are unaffected (converged
-  *                     state is a fixpoint).
+  *                     dispatch + the convergence round-trip, measured
+  *                     ~1 s/superstep at local[32]). Applies on every
+  *                     layout: each superstep inside a batch is lazily cut,
+  *                     so the dst layout's mid-batch frontier broadcast reads
+  *                     the previous superstep's cached RDD; grid/salt take
+  *                     their shuffled gather mid-batch. Convergence is
+  *                     checked at batch boundaries only, so a run may
+  *                     execute up to batchSize-1 supersteps past
+  *                     convergence. Those are no-ops for non-stationary
+  *                     programs (empty frontier), and a stationary program
+  *                     with tol = 0 runs exactly maxIter supersteps at any
+  *                     batch size; a stationary program with tol > 0 keeps
+  *                     updating its state past the tolerance, so its result
+  *                     depends on batchSize.
   */
 final case class SuperstepConfig(
     maxIter: Int = 100,
@@ -235,9 +242,12 @@ object Superstep {
     // build reads the PREVIOUS superstep's cached RDD instead of
     // re-executing its subtree, so batching now saves the per-superstep
     // metrics action + convergence round-trip there too. Convergence is
-    // checked at batch boundaries; supersteps past a fixpoint are no-ops
-    // (empty frontier for non-stationary programs, residual-stable state
-    // for stationary ones), so results are unchanged at any batch size.
+    // checked at batch boundaries only. Results are unchanged at any batch
+    // size for non-stationary programs (supersteps past the fixpoint have
+    // an empty frontier) and for stationary ones with tol = 0 (they run
+    // maxIter supersteps either way). A stationary program with tol > 0
+    // runs up to batchSize-1 more supersteps than an unbatched run and
+    // returns a different float state (pr_converged: tol 1e-6, batch 5).
     val effectiveBatch = math.max(1, cfg.batchSize)
 
     // One lazily-composed superstep: current state → next state.
@@ -252,10 +262,11 @@ object Superstep {
         .filter(c => c == "id" || gatherRefs.contains(c))
       val frontier0 = frontierRaw.select(keepCols.map(col).toSeq: _*)
         .withColumnRenamed("id", "src")
-      // A broadcast mid-batch would re-execute its whole build subtree
-      // (BroadcastExchange materializes its child per occurrence), so the
-      // broadcast sub-paths are only taken when supersteps materialize one
-      // at a time.
+      // The broadcast gather is taken mid-batch on the dst layout: its
+      // build side is the previous superstep's lazily-cut state, so the
+      // BroadcastExchange reads that cached RDD instead of re-executing the
+      // batch's subtree. The grid/salt layouts keep their broadcast
+      // sub-paths for unbatched runs and shuffle mid-batch.
       val smallFrontier = frontierSize < cfg.broadcastFrontierBelow &&
         (effectiveBatch == 1 || !(gridMode || saltMode))
       val msgs =

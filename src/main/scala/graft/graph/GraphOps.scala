@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -178,8 +177,8 @@ object GraphOps {
     * Scale shape: reciprocity is one self-semi-join of the edge set against
     * its reverse (shuffle on (src, dst), map-side combinable count);
     * transitivity reuses [[graft.algos.TriangleCount.count]]'s degree-
-    * oriented wedge plan; everything meets in broadcast one-row cross
-    * joins — no driver collect.
+    * oriented adjacency-intersection plan; everything meets in broadcast
+    * one-row cross joins — no driver collect.
     */
   def digraphProfile(edges: DataFrame): DataFrame = {
     val e = edges.select("src", "dst").where(col("src") =!= col("dst"))
@@ -210,10 +209,16 @@ object GraphOps {
 
   /** G2 — dense id assignment 0..V-1 by global sort order, scale-safe:
     * range-repartition + in-partition sort, per-partition counts collected
-    * once (tiny), then offset + local rank inside `mapPartitions`. The
+    * once (tiny), then offset + local rank per partition. The
     * assignment equals the global rank regardless of where the range
     * sampler placed partition bounds, so it is deterministic (SURVEY.md
     * §2.2 G2). Input: one string column `key`; output: (key, id).
+    *
+    * Both jobs index partitions with `mapPartitionsWithIndex` on the
+    * checkpointed RDD, never with `TaskContext.getPartitionId()`: when the
+    * output is read lazily inside a `Union`, the task's partition id is
+    * the union's, not this RDD's, and the offsets lookup would land on the
+    * wrong slot.
     */
   def denseIds(keys: DataFrame, partitions: Int = 32): DataFrame = {
     val spark = keys.sparkSession
@@ -230,16 +235,16 @@ object GraphOps {
       .sortWithinPartitions("key")
       .localCheckpoint(true)
       .as[String]
-    val counts = sorted.mapPartitions { it =>
-      Iterator.single((TaskContext.getPartitionId(), it.size.toLong))
+      .rdd
+    val counts = sorted.mapPartitionsWithIndex { (p, it) =>
+      Iterator.single((p, it.size.toLong))
     }.collect().toMap
-    val nParts = sorted.rdd.getNumPartitions
-    val offsets = (0 until nParts).scanLeft(0L) { (acc, p) =>
+    val offsets = (0 until sorted.getNumPartitions).scanLeft(0L) { (acc, p) =>
       acc + counts.getOrElse(p, 0L)
     }.toArray
     val bcOffsets = spark.sparkContext.broadcast(offsets)
-    sorted.mapPartitions { it =>
-      var i = bcOffsets.value(TaskContext.getPartitionId())
+    sorted.mapPartitionsWithIndex { (p, it) =>
+      var i = bcOffsets.value(p)
       it.map { k => val r = (k, i); i += 1; r }
     }.toDF("key", "id")
   }

@@ -53,6 +53,23 @@ class GraphOpsSpec extends SparkSpec {
     assert(m1 === m2)
   }
 
+  test("denseIds read lazily as the second child of a union: 0..V-1 once") {
+    val s = spark
+    import s.implicits._
+    val keys = (0 until 50).map(i => f"k$i%02d").toDF("key")
+    // the first child takes the union's partitions 0..2, so the id
+    // assignment runs in tasks whose partition ids are 3.. — ids must
+    // still come from the offsets of denseIds' own partitions
+    val other = Seq(("x", -1L), ("y", -2L), ("z", -3L)).toDF("key", "id")
+      .repartition(3)
+    val ids = GraphOps.denseIds(keys, partitions = 4)
+    val got = other.union(ids).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .filter(_._2 >= 0).sortBy(_._1)
+    assert(got.map(_._1).toSeq === (0 until 50).map(i => f"k$i%02d"))
+    assert(got.map(_._2).toSeq === (0L until 50L))
+  }
+
   test("edgeBlocks pack full adjacency per src, sorted") {
     val e = edgesWDf(Seq((0L, 3L, 1.0), (0L, 1L, 2.0), (5L, 0L, 1.0)))
     val blocks = GraphOps.edgeBlocks(e, 4).collect()

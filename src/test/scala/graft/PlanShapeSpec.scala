@@ -187,17 +187,19 @@ class PlanShapeSpec extends SparkSpec {
       s"packed landmark min fell back to SortAggregate:\n$plan")
   }
 
-  test("fourCliques plan: both clique checks are semi joins, no product") {
+  test("fourCliques plan: adjacency intersection, no wedge join, no product") {
     val s = spark
     import s.implicits._
     val e = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L),
       (2L, 3L)).toDF("src", "dst")
     val plan = fmt(graft.algos.TriangleCount.fourCliques(e))
-    // the (a,d) and (b,d) clique checks plus the triangle closing join:
-    // all three must ship ids only (semi), and nothing may degrade to a
-    // nested-loop/cartesian product
-    assert("LeftSemi".r.findAllIn(plan).size >= 3,
-      s"expected ≥3 semi joins in the K4 plan:\n$plan")
+    // triangles and their K4 extensions are intersections of packed
+    // forward adjacencies: no wedge row is built and closed by a semi
+    // join, and nothing may degrade to a nested-loop/cartesian product
+    assert(plan.contains("array_intersect"),
+      s"no adjacency intersection in the K4 plan:\n$plan")
+    assert(!plan.contains("LeftSemi"),
+      s"wedge-closing semi join in the K4 plan:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"product join in the K4 plan:\n$plan")

@@ -150,6 +150,57 @@ object Oracles {
     cnt
   }
 
+  /** Adjacency sets of the simple undirected graph: self-loops dropped,
+    * direction and duplicates ignored.
+    */
+  def simpleAdjacency(edges: Seq[(Long, Long)]): Map[Long, Set[Long]] =
+    edges.filter { case (a, b) => a != b }
+      .flatMap(e => Seq(e, e.swap)).distinct
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+
+  /** Every triangle of the simple undirected graph as an ascending vertex
+    * triple, found by brute force over vertex triples.
+    */
+  def bruteTriangleList(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
+    val adj = simpleAdjacency(edges)
+    val vs = adj.keys.toSeq.sorted
+    for {
+      i <- vs.indices; j <- (i + 1) until vs.size
+      if adj(vs(i))(vs(j))
+      k <- (j + 1) until vs.size
+      if adj(vs(j))(vs(k)) && adj(vs(i))(vs(k))
+    } yield (vs(i), vs(j), vs(k))
+  }
+
+  /** Brute-force 4-clique count: every triangle extended by a vertex
+    * above its largest corner that is adjacent to all three.
+    */
+  def bruteFourCliques(edges: Seq[(Long, Long)]): Long = {
+    val adj = simpleAdjacency(edges)
+    bruteTriangleList(edges).map { case (a, b, c) =>
+      adj(c).count(d => d > c && adj(a)(d) && adj(b)(d)).toLong
+    }.sum
+  }
+
+  /** Triangles through each vertex in ≥ 1 triangle. */
+  def brutePerVertexTriangles(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    bruteTriangleList(edges)
+      .flatMap { case (a, b, c) => Seq(a, b, c) }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  /** (tri_cnt, deg, lcc_micro) per vertex of the simple undirected graph,
+    * lcc_micro = floor(2e6 · tri / (deg · (deg − 1))), 0 when deg < 2.
+    */
+  def bruteLocalClustering(
+      edges: Seq[(Long, Long)]): Map[Long, (Long, Long, Long)] = {
+    val tri = brutePerVertexTriangles(edges)
+    simpleAdjacency(edges).map { case (v, ns) =>
+      val d = ns.size.toLong
+      val t = tri.getOrElse(v, 0L)
+      v -> ((t, d, if (d >= 2) 2000000L * t / (d * (d - 1)) else 0L))
+    }
+  }
+
   /** k-core by iterative peeling to fixpoint: survivors with their in-core
     * degree on the symmetrized simple graph.
     */

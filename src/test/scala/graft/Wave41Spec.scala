@@ -42,6 +42,14 @@ class Wave41Spec extends SparkSpec {
     val pvC = collectL(TriangleCount.perVertex(e, canonicalInput = true),
       "id", "tri_cnt")
     assert(pv == pvC)
+    assert(TriangleCount.fourCliques(e).collect().toSeq.map(_.getLong(0)) ==
+      TriangleCount.fourCliques(e, canonicalInput = true).collect().toSeq
+        .map(_.getLong(0)))
+    def lccRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    assert(lccRows(TriangleCount.localClustering(e)) ==
+      lccRows(TriangleCount.localClustering(e, canonicalInput = true)))
     val sc = TriangleCount.sampledCount(e, 4).collect().head
     val scC = TriangleCount.sampledCount(e, 4, canonicalInput = true)
       .collect().head
